@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -72,7 +73,7 @@ object ScaledData {
     require(copies >= 1 && copies.toLong * KeyShift <= Int.MaxValue,
       s"copies=$copies would overflow INT key columns (max ${Int.MaxValue / KeyShift})")
     tables.foreach { t =>
-      replicateTable(spark.read.parquet(s"$srcDir/$t.parquet"), t, copies)
+      replicateTable(Tables.t(spark, srcDir, t), t, copies)
         .write.mode("overwrite").parquet(s"$outDir/$t.parquet")
     }
   }

@@ -1,5 +1,6 @@
 package graft.state
 
+import graft.sources.Tables
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -36,7 +37,7 @@ object DispatchState {
 
   def read(spark: SparkSession, dir: String): DataFrame =
     Snapshots.currentVersion(Snapshots.fs(spark), dir) match {
-      case Some(n) => spark.read.parquet(s"$dir/v-$n")
+      case Some(n) => Tables.parquet(spark, s"$dir/v-$n")
       case None =>
         // migration path: a state dir written by the earlier delete-and-
         // rename layout holds `{dir}/current/` and no v-* versions.
@@ -44,7 +45,7 @@ object DispatchState {
         // failure this class prevents), so read the legacy table; the
         // next upsert folds it into v-1 and the pointer takes over.
         val legacy = new Path(s"$dir/current")
-        if (Snapshots.fs(spark).exists(legacy)) spark.read.parquet(legacy.toString)
+        if (Snapshots.fs(spark).exists(legacy)) Tables.parquet(spark, legacy.toString)
         else
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],

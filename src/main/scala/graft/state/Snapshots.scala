@@ -1,5 +1,6 @@
 package graft.state
 
+import graft.sources.Tables
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -59,7 +60,7 @@ private[state] object Snapshots {
   /** Current snapshot, or an empty frame of `schema` for a fresh store. */
   def read(spark: SparkSession, dir: String, schema: StructType): DataFrame =
     currentVersion(fs(spark), dir) match {
-      case Some(n) => spark.read.parquet(s"$dir/v-$n")
+      case Some(n) => Tables.parquet(spark, s"$dir/v-$n")
       case None =>
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
