@@ -14,6 +14,37 @@ import org.apache.spark.sql.SparkSession
   *    (pandas `to_numeric(errors="coerce")`, /root/reference/backend/main.py:197);
   *    permissive mode reproduces that and matches DuckDB TRY_CAST oracles.
   *  - Session TZ pinned UTC for date/timestamp parity with the oracle.
+  *  - Generated code stays compiled across runs. Spark caches each
+  *    Janino-compiled class, keyed by its source and classloader, in an
+  *    LRU of `spark.sql.codegen.cache.maxEntries` classes (default 100).
+  *    Between two uses of one class graft touches more than 100 others, so
+  *    at the default every class was evicted just before it was needed
+  *    again and warm runs recompiled it (on 4 cores at sf0.01: 52-76
+  *    compiles, 0.7-1.5 s, per perfbench dispatch cycle; 80-100 per
+  *    `dd_conn_components` run). Measured distinct working sets: 168
+  *    classes for a whole dispatch run (set-ups, cycles and checks), 274
+  *    for a catalog run of `sq_scalar_small_qty`, `dd_conn_components` and
+  *    `w_stream_update_replay`. 1000 leaves several times that headroom;
+  *    classes outside the working set are never compiled, so they never
+  *    fill it. The setting is static: `CodeGenerator` reads it once per
+  *    JVM, when the object first initialises, so it must be a builder
+  *    config, and no code may be generated before the session exists — a
+  *    later `conf.set` has no effect.
+  *  - Artifact isolation off. With it on (Spark's default), each cloned
+  *    session — every streaming query runs in one — gets its own executor
+  *    classloader, so every new stream missed the cache and recompiled the
+  *    same 19 classes (`w_stream_update_replay`, about 0.15 s a run on the
+  *    same box). graft adds no session artifacts (no addArtifact/addJar/
+  *    addFile), so isolation guards nothing here. Read once, when a
+  *    session is created.
+  *  - Whole-stage classes unnumbered (`useIdInClassName` off). AQE numbers
+  *    codegen stages in the order it plans them, which varies with stage
+  *    completion order; the number is part of the class name, so the same
+  *    stage could compile again under a new name. Unnumbered, one source
+  *    is one class. Stack traces show `GeneratedIterator` without the
+  *    stage number.
+  *  `graft.plans.CodegenCacheSpec` pins all three: a repeated round of
+  *  catalog queries and pipelines compiles nothing.
   */
 object GraftSession {
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
@@ -47,6 +78,10 @@ object GraftSession {
       // arrives as TIMESTAMP_NTZ untouched.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // Codegen reuse; see the design notes.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.useIdInClassName", "false")
 
   /** Session for local tools and tests. */
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {

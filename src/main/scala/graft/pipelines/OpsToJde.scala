@@ -4,7 +4,7 @@ import graft.functions.{Keys, Num, Quantities, Units}
 import graft.lake.LakeWriter
 import graft.ops.ActionFlattener
 import graft.state.DispatchState
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** §3.3 — the dispatch pipeline (SURVEY.md;
@@ -25,18 +25,10 @@ import org.apache.spark.sql.functions._
 object OpsToJde {
   case class Result(flattened: Long, eligible: Long, dispatched: Long)
 
-  /** @param actions nested action docs (ActionFlattener schema)
-    * @param dispatch per-partition payload consumer (the POST boundary) */
-  def run(
-      spark: SparkSession,
-      actions: DataFrame,
-      stateDir: String,
-      lakeRoot: String,
-      batchTs: String,
-      dispatch: Iterator[Row] => Unit = _ => ()): Result = {
-    val flat = ActionFlattener.flatten(actions)
-
-    val prepared = flat
+  /** Flattened rows with the guard verdict in `__eligible`, the F5 qty and
+    * the F7 id — everything before the in-batch dedup. */
+  private[pipelines] def prepare(actions: DataFrame): DataFrame =
+    ActionFlattener.flatten(actions)
       // P7: zero/null-quantity guard (dag_bakery_system_to_jde.py:176-179)
       // P9: required-fields guard (jde_helper.py:1310-1312)
       .withColumn("__eligible",
@@ -48,10 +40,26 @@ object OpsToJde {
         Quantities.uniqueTransactionId(
           col("ingredient_name"), col("lot"), col("vessel"), col("qty")))   // F7
 
-    val eligible = prepared
+  /** @param actions nested action docs (ActionFlattener schema)
+    * @param dispatch per-partition payload consumer (the POST boundary) */
+  def run(
+      spark: SparkSession,
+      actions: DataFrame,
+      stateDir: String,
+      lakeRoot: String,
+      batchTs: String,
+      dispatch: Iterator[Row] => Unit = _ => ()): Result = {
+    // Audit counters ride on the pass that fills `pending` (observed
+    // metrics report through its persist): every flattened row, and every
+    // row left after the guards and the dedup — one per distinct id, and
+    // the id is never null (concat_ws skips nulls).
+    val flattenedObs, eligibleObs = Observation()
+    val eligible = prepare(actions)
+      .observe(flattenedObs, count(lit(1)).as("n"))
       .filter(col("__eligible")).drop("__eligible")
       // overlapping-lookback in-batch dedup (first occurrence wins)
       .dropDuplicates("unique_transaction_id")
+      .observe(eligibleObs, count(lit(1)).as("n"))
 
     val payloads = eligible.select(
       col("unique_transaction_id"),
@@ -75,16 +83,9 @@ object OpsToJde {
         Keys.truncateStatus(concat(lit("dispatched "), col("Item_Number"))).as("detail"), // F17
         col("dispatched_at").as("updated_at")))
       LakeWriter.append(pending, lakeRoot, "jde_dispatch", "dispatched_at")
-      // Audit counters in ONE pass over the flatten: count(*) for the raw
-      // row count, count(DISTINCT utid) gated by the eligibility flag for
-      // the post-guard post-dedup count (count distinct skips the nulls
-      // `when` leaves on ineligible rows). The id is never null on an
-      // eligible row — both guard fields are non-empty by construction.
-      val audit = prepared.agg(
-        count(lit(1)).as("flattened"),
-        count_distinct(when(col("__eligible"), col("unique_transaction_id")))
-          .as("eligible")).first()
-      Result(audit.getLong(0), audit.getLong(1), nPending)
+      // Default 0 for an observation that reports no value.
+      def observed(o: Observation) = o.get.getOrElse("n", 0L).asInstanceOf[Long]
+      Result(observed(flattenedObs), observed(eligibleObs), nPending)
     } finally pending.unpersist()
   }
 }

@@ -2,9 +2,12 @@ package graft.pipelines
 
 import graft.SparkSpec
 import graft.sources.Tables
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.DurationInt
 
 /** End-to-end pipeline composition on the test tables: flatten -> guards ->
   * identity -> units/keys -> exactly-once gate -> dispatch + lake + state,
@@ -23,6 +26,31 @@ class PipelineSpec extends SparkSpec {
       map(concat(lit("V"), pmod(col("l_suppkey"), lit(3))), col("l_quantity")).as("additions"))
     li.select(col("l_orderkey").as("action_id"), ing.as("ing"))
       .groupBy("action_id").agg(collect_list("ing").as("ingredients"))
+  }
+
+  private def guardedBatch = PipelineInputs.guardedBatch(spark)
+
+  test("OpsToJde: exact audit counts on a guarded batch match the count-distinct audit") {
+    val stateDir = Files.createTempDirectory("p-state").toString
+    val lakeRoot = Files.createTempDirectory("p-lake").toString
+    val r = OpsToJde.run(spark, guardedBatch, stateDir, lakeRoot, "2024-03-01 12:00:00")
+    assert(r === OpsToJde.Result(flattened = 9, eligible = 4, dispatched = 4))
+    // the single-pass aggregate the observations replace, over the same flatten
+    val audit = OpsToJde.prepare(guardedBatch).agg(
+      count(lit(1)),
+      count_distinct(when(col("__eligible"), col("unique_transaction_id")))).first()
+    assert((r.flattened, r.eligible) === ((audit.getLong(0), audit.getLong(1))))
+    assert(spark.read.parquet(s"$lakeRoot/jde_dispatch").count() === 4)
+  }
+
+  test("OpsToJde: an empty or all-ineligible batch dispatches nothing, without hanging") {
+    def run(batch: DataFrame) = Await.result(Future(OpsToJde.run(spark, batch,
+      Files.createTempDirectory("p-state").toString, Files.createTempDirectory("p-lake").toString,
+      "2024-03-01 12:00:00"))(ExecutionContext.global), 2.minutes)
+    assert(run(guardedBatch.limit(0)) === OpsToJde.Result(0, 0, 0))
+    // the empty-name and zero-qty ingredients only: 2 flattened, none eligible
+    assert(run(guardedBatch.filter(col("action_id") === 2).select(col("action_id"),
+      slice(col("ingredients"), 2, 2).as("ingredients"))) === OpsToJde.Result(2, 0, 0))
   }
 
   test("OpsToJde: full run then replay — replay dispatches nothing") {
@@ -49,17 +77,8 @@ class PipelineSpec extends SparkSpec {
 
   test("CardexToOps: mismatch pruning, lookup, classification, payload sink") {
     val lakeRoot = Files.createTempDirectory("c-lake").toString
-    // cardex side: order totals; ops side: part dimension with archived flag
-    val cardex = Tables.lineitem(spark, sfSmoke)
-      .join(broadcast(Tables.part(spark, sfSmoke)), col("l_partkey") === col("p_partkey"))
-      .select(col("p_name").as("item_name"), col("l_quantity").as("qty"))
-      // names that exist only in JDE -> must classify "Product Not Found"
-      .unionByName(Seq(("GHOST_A", 5.0), ("GHOST_B", 7.5)).toDF("item_name", "qty"))
-    val products = Tables.part(spark, sfSmoke)
-      .select(
-        col("p_name").as("productName"),
-        col("p_retailprice").as("onHandAmount"),
-        (pmod(col("p_partkey"), lit(7)) === 0).as("archived"))
+    val cardex = PipelineInputs.cardex(spark, sfSmoke)
+    val products = PipelineInputs.products(spark, sfSmoke)
 
     val classified = CardexToOps.run(spark, cardex, products, lakeRoot, "2024-03-01 12:00:00")
     val statuses = classified.select("dispatch_status").distinct().as[String].collect().toSet
