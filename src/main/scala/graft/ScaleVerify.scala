@@ -23,16 +23,11 @@ package graft
   */
 object ScaleVerify {
   def main(args: Array[String]): Unit = {
-    val Array(srcDir, replicaDir, copiesStr, outDir) = args
-    val copies = copiesStr.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-        .orElse(if (sys.env.get("SPARK_GRAFT_SCALE_ALL").contains("1")) None
-                else Some(Bench.headline))
-    ScaledData.generate(spark, srcDir, replicaDir, copies)
+    val Array(srcDir, replicaDir, copies, outDir) = args
+    val spark = Harness.session()
+    val only = Harness.only.orElse(
+      if (sys.env.get("SPARK_GRAFT_SCALE_ALL").contains("1")) None else Some(Bench.headline))
+    ScaledData.generate(spark, srcDir, replicaDir, copies.toInt)
     Verify.dump(spark, replicaDir, outDir, only)
     spark.stop()
   }

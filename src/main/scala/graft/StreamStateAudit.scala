@@ -1,6 +1,8 @@
 package graft
 
-/** Stream-state boundedness audit (round-15 verdict #2): the two most
+import scala.collection.immutable.ListMap
+
+/** Stream-state boundedness audit: the two most
   * expensive catalog queries — the watermarked stream-stream joins
   * `j_stream_confirm_replay` and `j_stream_outer_replay` — carry the
   * at-scale claim "join state is bounded by the watermark". This main
@@ -22,7 +24,7 @@ package graft
   *
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
   * SPARK_GRAFT_SCALE_COPIES (default 10; 0 skips the scaled point),
-  * SPARK_GRAFT_CPUS (default 16), SPARK_GRAFT_BENCH_OUT (artifact path).
+  * SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_OUT (artifact path).
   */
 object StreamStateAudit {
   private val Audited = Seq(
@@ -32,46 +34,34 @@ object StreamStateAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val outPath = sys.env.get("SPARK_GRAFT_BENCH_OUT")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
-    def point(dir: String, label: String): String =
-      Audited.map { case (qname, sink) =>
+    def point(dir: String, label: String): (String, Any) =
+      label -> ListMap(Audited.map { case (qname, sink) =>
         System.err.println(s"[streamstate] $label $qname")
-        val t0 = System.nanoTime()
-        SparkEntry.queries(qname)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
+        val sec = Harness.timeNoop(spark, SparkEntry.queries(qname), dir)
+          .fold(e => sys.error(s"$qname failed: $e"), identity)
         val trace = graft.streaming.StreamProbe.get(sink).getOrElse(Seq.empty)
-        val batches = trace.map(b =>
-          s"""{"batch":${b.batchId},"input":${b.inputRows},"state_rows":${b.stateRows},"state_mem_bytes":${b.stateMemBytes},"updated":${b.rowsUpdated},"removed":${b.rowsRemoved}}""")
-          .mkString("[", ",", "]")
-        val totalIn = trace.map(_.inputRows).sum
-        val maxState = (trace.map(_.stateRows) :+ 0L).max
-        val lastState = trace.lastOption.fold(0L)(_.stateRows)
-        val maxMem = (trace.map(_.stateMemBytes) :+ 0L).max
-        s""""$qname":{"sec":$sec,"total_input_rows":$totalIn,"max_state_rows":$maxState,"last_state_rows":$lastState,"max_state_mem_bytes":$maxMem,"removed_total":${trace.map(_.rowsRemoved).sum},"batches":$batches}"""
-      }.mkString(s""""$label":{""", ",", "}")
+        qname -> ListMap("sec" -> sec,
+          "total_input_rows" -> trace.map(_.inputRows).sum,
+          "max_state_rows" -> (trace.map(_.stateRows) :+ 0L).max,
+          "last_state_rows" -> trace.lastOption.fold(0L)(_.stateRows),
+          "max_state_mem_bytes" -> (trace.map(_.stateMemBytes) :+ 0L).max,
+          "removed_total" -> trace.map(_.rowsRemoved).sum,
+          "batches" -> trace.map(b => ListMap("batch" -> b.batchId, "input" -> b.inputRows,
+            "state_rows" -> b.stateRows, "state_mem_bytes" -> b.stateMemBytes,
+            "updated" -> b.rowsUpdated, "removed" -> b.rowsRemoved)))
+      }: _*)
 
-    val p1 = point(sfDir, "1x")
-    val pN =
-      if (copies <= 0) None
-      else {
-        val replica = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft-streamstate-${java.util.UUID.randomUUID()}").getAbsolutePath
-        System.err.println(s"[streamstate] generating ${copies}x replica")
-        ScaledData.generate(spark, sfDir, replica, copies)
-        try Some(point(replica, s"${copies}x"))
-        finally {
-          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(replica)); ()
-        }
-      }
+    val replicas = new Harness.Replicas(sfDir)
+    val points =
+      try Seq(point(sfDir, "1x")) ++
+        (if (copies <= 0) None else Some(point(replicas(spark, copies), s"${copies}x")))
+      finally replicas.close()
     spark.stop()
-    val line =
-      s"""{"metric":"stream_state","sf_dir":"$sfDir","copies":$copies,${(Seq(p1) ++ pN).mkString(",")}}"""
-    outPath.foreach { o =>
+    val line = Harness.json(
+      ListMap("metric" -> "stream_state", "sf_dir" -> sfDir, "copies" -> copies) ++ points)
+    sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { o =>
       try Bench.writeAtomic(o, line + "\n")
       catch { case e: Throwable =>
         System.err.println(s"[streamstate] artifact write skipped: $e") }

@@ -1,8 +1,9 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare in tools/check.py.
+  * Usage: Verify <sfDir> <outDir>; SPARK_GRAFT_ONLY=a,b dumps just those. */
 object Verify {
   /** Dump each selected query's result parquet + the oracle-SQL json into
     * `outDir` — the shared engine behind Verify (driver gate, full
@@ -24,32 +25,17 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // iteration aid (same contract as Bench): SPARK_GRAFT_ONLY=a,b dumps
-    // just those queries; unset = full catalog (what the driver runs)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    dump(spark, sfDir, outDir, only)
+    val spark = Harness.session()
+    dump(spark, sfDir, outDir, Harness.only)
     spark.stop()
   }
 
-  private def writeOracleJson(outDir: String): Unit = {
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+  /** Every control character must be escaped: a raw tab or CR in the SQL
+    * would make the JSON reader in tools/check.py fail and zero the
+    * correctness run. */
+  private[graft] def writeOracleJson(outDir: String,
+                                     sql: Map[String, String] = SparkEntry.oracleSql): Unit = {
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), Harness.json(sql))
     ()
   }
 }

@@ -59,35 +59,14 @@ object ConnectedComponents {
       .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
   }
 
-  /** Shuffle-partition count for a fixpoint loop, derived from the
-    * MEASURED edge count (round-17; the streaming statePartitions fix's
-    * batch sibling, guide §2.2/§2.4 — measured rows, not plan stats: a
-    * lineage-cut input's LogicalRDD reports the Long.MaxValue default
-    * estimate, which a stats-based formula turns into the 32k cap). The
-    * per-round frames are node/edge-sized, but every exchange,
-    * localCheckpoint and cut-reader stage inside the loop inherits the
-    * SESSION shuffle-partition count (= local core count), so each of
-    * the O(log d) rounds scheduled 32-task stages over kilobytes — pure
-    * per-partition fixed overhead, paid once per stage per round. Target
-    * ~1 M edge rows (tens of MB) per partition, floor 1, cap 32k; on a
-    * real cluster the same formula widens with the data instead of the
-    * core count. `spark.graft.cc.shufflePartitions` overrides for
-    * deployments whose label-to-edge ratio differs. Results are
-    * partition-count independent: labels are keyed min-aggregates and
-    * every consumer totally orders its output. */
-  private def withLoopPartitions[T](s: org.apache.spark.sql.SparkSession,
-                                    edgeRows: Long)(body: => T): T = {
-    val n = s.conf.getOption("spark.graft.cc.shufflePartitions")
-      .map(_.trim.toInt)
-      .getOrElse {
-        val per = 1L << 20
-        math.min(math.max(1L, (edgeRows + per - 1) / per), 32768L).toInt
-      }
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
+  /** Loop shuffle width: ~1 M edge rows (tens of MB) per partition, from
+    * the measured edge count ([[Par.withShufflePartitions]]). Every
+    * exchange, localCheckpoint and cut-reader stage in the loop inherits
+    * the session width, so at the core-count default each of the O(log d)
+    * rounds scheduled 32-task stages over kilobytes. Results do not depend
+    * on the width: labels are keyed min-aggregates and every consumer
+    * totally orders its output. */
+  private val EdgesPerPartition = 1L << 20
 
   /** Fixpoint min-label propagation over `edges` (long src/dst, symmetric).
     *
@@ -101,9 +80,9 @@ object ConnectedComponents {
     // TWICE (the pointer-halving self-join), and both copies materialize
     // as concurrent AQE stages — with a lazy persist each would compute
     // the edge derivation before either fills the cache. The count also
-    // sizes the loop's shuffle partitions (withLoopPartitions).
+    // sizes the loop's shuffle partitions (EdgesPerPartition).
     val nEdges = e.count()
-    withLoopPartitions(nodes.sparkSession, nEdges) {
+    Par.withShufflePartitions(nodes.sparkSession, nEdges, EdgesPerPartition) {
     var labels = nodes.select(col(idCol), col(idCol).as("component"))
     // only checkpoints THIS loop created are ever released — the initial
     // labels frame derives from the caller's `nodes` plan, and walking it
@@ -146,8 +125,6 @@ object ConnectedComponents {
         .cutLineage(false)
       val nChanged = next
         .agg(count_if(col("component") =!= col("__old"))).first().getLong(0)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        Console.err.println(s"[cc] round $rounds changed=$nChanged")
       changed = nChanged > 0
       // the new checkpoint fully materialized (the probe ran), so the
       // PREVIOUS round's checkpoint blocks are dead weight — release them
@@ -209,8 +186,8 @@ object ConnectedComponents {
     }
     var sig = signature(e)
     // the signature's count is the measured edge cardinality — size the
-    // loop's shuffle partitions from it (see withLoopPartitions)
-    withLoopPartitions(nodes.sparkSession, sig._1) {
+    // loop's shuffle partitions from it (see EdgesPerPartition)
+    Par.withShufflePartitions(nodes.sparkSession, sig._1, EdgesPerPartition) {
     var rounds = 0
     var stable = false
     while (!stable && rounds < maxRounds) {

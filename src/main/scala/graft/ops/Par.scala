@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Scan-side parallelism repair for CPU-heavy row-local passes.
   *
@@ -89,6 +89,24 @@ object Par {
     val pool = math.max(0L, ((sysMem - reserved) * fraction).toLong)
     math.max(1L, pool / longConf(ds, "spark.graft.spread.taskMemFloor",
       DefaultTaskMemFloor))
+  }
+
+  /** Run `body` with `spark.sql.shuffle.partitions` sized from a measured
+    * quantity, ceil(measured / perPartition) clamped to [1, 32768], and
+    * restore the previous value afterwards. For work whose partition count
+    * the session default (the core count) gets wrong in both directions:
+    * tiny frames pay per-partition fixed cost on every stage, and on a
+    * cluster the width should follow the data. Measured, not planned:
+    * a lineage-cut input reports the Long.MaxValue size estimate. The
+    * session conf is shared, so this is safe only while one query runs on
+    * a session at a time, as in every graft harness. */
+  def withShufflePartitions[T](spark: SparkSession, measured: Long,
+                               perPartition: Long)(body: => T): T = {
+    val n = math.min(math.max(1L, (measured + perPartition - 1) / perPartition), 32768L)
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try body finally spark.conf.set(key, prev)
   }
 
   def spread[T](ds: Dataset[T]): Dataset[T] = {

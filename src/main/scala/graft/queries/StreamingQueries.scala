@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.ops.Par
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -98,55 +99,29 @@ object StreamingQueries {
     }
   }
 
-  /** State/shuffle partition count for a replay stream, derived from the
-    * bytes actually fed to it (round-16 optimization, guide §2.2/§2.4).
-    * Stateful streaming pins its state-store partitioning from
-    * spark.sql.shuffle.partitions at query start and AQE never revisits
-    * it, so the session default (= local core count) hands EVERY
-    * micro-batch `cores` state-store partitions per stateful operator
-    * regardless of data size. The cost is per-partition-per-batch, not
-    * per-row: each store pays an open + commit + fsync'd delta file each
-    * trigger (a stream-stream join carries FOUR stores per partition), so
-    * at replay scale 32 partitions × ~6 batches is ~97% pure fixed
-    * overhead (measured: the whole inner-join output is 9k rows). On a
-    * real cluster a core-count default is equally wrong in the other
-    * direction — state should be partitioned by its SIZE. Target ~32 MiB
-    * of parquet feed per state partition (in-store state of these replay
-    * shapes is input-bounded by the watermark horizon), floor 1, cap 32k;
-    * spark.graft.stream.statePartitions overrides for deployments whose
-    * state-to-input ratio differs. Results are partition-count
-    * independent: watermarks are global (max event time across
-    * partitions), state is hash-partitioned by key, and every replay
-    * query's output is totally ordered before hashing. */
-  private def statePartitions(s: SparkSession, feedBytes: Long): Int =
-    s.conf.getOption("spark.graft.stream.statePartitions")
-      .map(_.trim.toInt)
-      .getOrElse {
-        val perPartition = 32L * 1024 * 1024
-        math.min(math.max(1L, (feedBytes + perPartition - 1) / perPartition),
-          32768L).toInt
-      }
-
-  /** Run `body` with spark.sql.shuffle.partitions set to `n`, restoring
-    * the previous value afterwards. Session-conf scope is safe here:
-    * every harness (Bench, Verify, the sequential test JVM) runs catalog
-    * queries one at a time on the shared session. */
-  private def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
+  /** State/shuffle width of a replay stream: ~32 MiB of parquet feed per
+    * partition ([[Par.withShufflePartitions]]). Stateful streaming pins its
+    * state-store partitioning from spark.sql.shuffle.partitions at query
+    * start and AQE never revisits it, and each store pays an open, a
+    * commit and an fsync'd delta file every trigger (a stream-stream join
+    * carries four stores per partition). At the core-count default, 32
+    * partitions × ~6 batches was ~97% fixed overhead at replay scale; the
+    * in-store state of these shapes is bounded by the feed within the
+    * watermark horizon. Results do not depend on the width: watermarks
+    * are global, state is hash-partitioned by key, and every replay's
+    * output is totally ordered before hashing. */
+  private val FeedBytesPerPartition = 32L << 20
 
   /** Run `build(stream)` over a file-source replay of `feed` (schema =
-    * feed's schema minus the batch column), append mode into a fresh
-    * memory sink; returns the sink table. The streaming plan runs under
-    * the feed-size-derived state partition count (see statePartitions);
+    * feed's schema minus the batch column) into a fresh memory sink in
+    * `outputMode`; returns the sink table. The streaming
+    * plan runs under the feed-size-derived width (FeedBytesPerPartition);
     * the replay feed write and the final result sort stay on the session
     * default. */
   private def runReplay(s: SparkSession, tmp: File, sinkName: String,
                         feeds: Seq[(DataFrame, Column, String)],
-                        build: Seq[DataFrame] => DataFrame): DataFrame = {
+                        build: Seq[DataFrame] => DataFrame,
+                        outputMode: String = "append"): DataFrame = {
     // the per-feed replay writes are independent jobs — overlap them
     // (guide §2.6: Spark's scheduler runs concurrent jobs fine; the
     // two-feed join replays previously paid the writes back-to-back).
@@ -178,7 +153,7 @@ object StreamingQueries {
       Option(d.listFiles()).getOrElse(Array.empty[File]).map(_.length()).sum
     }.sum
     s.catalog.dropTempView(sinkName)
-    val q = withShufflePartitions(s, statePartitions(s, feedBytes)) {
+    val q = Par.withShufflePartitions(s, feedBytes, FeedBytesPerPartition) {
       val streams = dirs.map { case (feed, streamDir) =>
         s.readStream
           .schema(feed.schema)
@@ -189,7 +164,7 @@ object StreamingQueries {
         .writeStream
         .format("memory")
         .queryName(sinkName)
-        .outputMode("append")
+        .outputMode(outputMode)
         .option("checkpointLocation", new File(tmp, s"ckpt-$sinkName").getAbsolutePath)
         .trigger(Trigger.AvailableNow())
         .start()
@@ -199,8 +174,8 @@ object StreamingQueries {
     // publish the per-batch state-store trace (round-15 verdict #2: the
     // watermark-bounded-state claim must be measured, not plan-asserted)
     // and the executed micro-batch plan (round-16: the partitioning
-    // evidence behind statePartitions); driver-side only, the hashed
-    // result is untouched
+    // evidence behind FeedBytesPerPartition); recorded after the run, the
+    // hashed result is untouched
     graft.streaming.StreamProbe.record(sinkName, q.recentProgress)
     graft.streaming.StreamProbe.recordPlan(sinkName, q)
     s.table(sinkName)
@@ -571,36 +546,15 @@ object StreamingQueries {
           val ev = Tables.events(s, dir)
             .filter(col("ts").isNotNull)
             .select(col("event_id"), col("ts"))
-          val streamDir = new File(tmp, "in")
-          streamDir.mkdirs()
-          writeReplayBatches(ev, pmod(col("event_id"), lit(ReplayBatches)),
-            streamDir, tmp)
-          val feedBytes = Option(streamDir.listFiles())
-            .getOrElse(Array.empty[File]).map(_.length()).sum
-          s.catalog.dropTempView("w_stream_update_sink")
-          val q = withShufflePartitions(s, statePartitions(s, feedBytes)) {
-            val stream = s.readStream
-              .schema(ev.schema)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(streamDir.getAbsolutePath)
-            val query = stream
-              .withWatermark("ts", s"${DelayMs / 1000} seconds")
-              .groupBy(window(col("ts"), "1 hour"))
-              .agg(count(lit(1)).as("n_events"))
-              .writeStream
-              .format("memory")
-              .queryName("w_stream_update_sink")
-              .outputMode("update") // the one mode the other replays never use
-              .option("checkpointLocation",
-                new File(tmp, "ckpt-update").getAbsolutePath)
-              .trigger(Trigger.AvailableNow())
-              .start()
-            query.awaitTermination()
-            query
-          }
-          graft.streaming.StreamProbe.record("w_stream_update_sink", q.recentProgress)
-          graft.streaming.StreamProbe.recordPlan("w_stream_update_sink", q)
-          s.table("w_stream_update_sink")
+          runReplay(s, tmp, "w_stream_update_sink",
+            Seq((ev, pmod(col("event_id"), lit(ReplayBatches)), "in")),
+            { case Seq(stream) =>
+              stream
+                .withWatermark("ts", s"${DelayMs / 1000} seconds")
+                .groupBy(window(col("ts"), "1 hour"))
+                .agg(count(lit(1)).as("n_events"))
+            },
+            outputMode = "update") // the one mode the other replays never use
             .select(
               col("window.start").as("window_start"),
               col("window.end").as("window_end"),

@@ -35,23 +35,22 @@ import org.apache.spark.sql.functions._
 object DispatchState {
   private val keyCol = "unique_transaction_id"
 
-  def read(spark: SparkSession, dir: String): DataFrame =
-    Snapshots.currentVersion(Snapshots.fs(spark), dir) match {
-      case Some(n) => Tables.parquet(spark, s"$dir/v-$n")
-      case None =>
-        // migration path: a state dir written by the earlier delete-and-
-        // rename layout holds `{dir}/current/` and no v-* versions.
-        // Treating it as empty would re-dispatch ALL history (the exact
-        // failure this class prevents), so read the legacy table; the
-        // next upsert folds it into v-1 and the pointer takes over.
-        val legacy = new Path(s"$dir/current")
-        if (Snapshots.fs(spark).exists(legacy)) Tables.parquet(spark, legacy.toString)
-        else
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType.fromDDL(
-              s"$keyCol STRING, status STRING, detail STRING, updated_at TIMESTAMP"))
-    }
+  private val Schema = org.apache.spark.sql.types.StructType.fromDDL(
+    s"$keyCol STRING, status STRING, detail STRING, updated_at TIMESTAMP")
+
+  /** The current snapshot, empty for a fresh store. Migration path: a
+    * state dir written by the earlier delete-and-rename layout holds
+    * `{dir}/current/` and no v-* versions. Treating it as empty would
+    * re-dispatch ALL history (the exact failure this class prevents), so
+    * read the legacy table; the next upsert folds it into v-1 and the
+    * pointer takes over. */
+  def read(spark: SparkSession, dir: String): DataFrame = {
+    val hfs = Snapshots.fs(spark)
+    val legacy = new Path(s"$dir/current")
+    if (hfs.exists(legacy) && Snapshots.currentVersion(hfs, dir).isEmpty)
+      Tables.parquet(spark, legacy.toString)
+    else Snapshots.read(spark, dir, Schema)
+  }
 
   /** J5: records not yet dispatched (status 'done' absent) — the
     * exactly-once gate. Broadcast the done-set when it is the small side. */

@@ -2,7 +2,11 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
 
 /** The bench artifact's atomic-write contract (round-10 verdict #2): a
   * killed run must never leave the destination holding a partial line —
@@ -197,5 +201,131 @@ class BenchArtifactSpec extends AnyFunSuite {
     val both = Bench.artifactNotice(Some("/root/repo/BENCHFULL_PARTIAL.json"),
       3, degraded = false, constrainedErrors = 2)
     assert(both.exists(_.contains("3 passes skipped")))
+  }
+
+  // Records built from fixed samples, without Spark: the artifact's key
+  // paths are its contract with every consumer of BENCHFULL*.json.
+  import Bench.{MainRow, ScaledRow}
+  import StreamPoints.Batch
+
+  /** Every node's path; object keys in `names` read as Q, array
+    * elements as []. */
+  private def keyPaths(n: JsonNode, names: Set[String], p: String = ""): Set[String] =
+    Set(if (p.isEmpty) "/" else p) ++ (
+      if (n.isObject) n.properties.asScala.flatMap(e =>
+        keyPaths(e.getValue, names, p + "/" + (if (names(e.getKey)) "Q" else e.getKey)))
+      else if (n.isArray) n.elements.asScala.flatMap(keyPaths(_, names, p + "[]"))
+      else Nil)
+
+  private val Names = Set("qa", "qb", "qc")
+  private val Err = "java.lang.OutOfMemoryError: \"quoted\" C:\\tmp\tcol\nline\u0001end"
+
+  private def sampleRecord(nQueries: Int = 3): Bench.Record = {
+    val names = if (nQueries == 3) Seq("qa", "qb", "qc")
+      else (1 to nQueries).map(i => f"catalog_query_with_a_long_name_$i%03d")
+    val main = Bench.mainRecord(names.zipWithIndex.map { case (n, i) =>
+      MainRow(n, Seq(3.0 + i, 1.0 + i, 2.0 + i), Seq(1.234, 2.5, 0.1)) },
+      runs = 3, sf = "0.01", cpus = 4, budgetSec = 2520, elapsedSec = 61.5,
+      skipped = Seq("scaled-retry:qc", Err))
+    val stream = StreamPoints.restRecord(16, 2000, 0.8,
+      Seq(Batch(16000, 410), Batch(16000, 145)), load = 1.43)
+    val wide = StreamPoints.restRecord(8, 10000, 0.2, Seq(Batch(80000, 142)), 1.5)
+    val bulk = StreamPoints.restRecord(16, 10000, 0.2, Seq(Batch(160000, 165)), 1.5)
+    val state = StreamPoints.stateRecord(150000, 15.3,
+      Seq(Batch(150000, 2072, 150000, 280832, 150000, 0),
+        Batch(150000, 962, 300000, 11274576, 150000, 150000)))
+    val rows = Seq(ScaledRow("qa", Seq(0.5, 0.4), Seq(2.41, 2.4), None, 2),
+      ScaledRow("qb", Seq(0.3), Seq(1.0, 1.1), Some(Err), 2),
+      ScaledRow("qc", Nil, Seq(1.0, 1.2), Some(Err), 2))
+    val scaled = Bench.scaledRecord(10, 1, 2, rows, rescued = Seq("qa"))
+    val full = Bench.scaledRecord(5, 1, 1, rows, rescued = Seq("qa"))
+    val constrained = Bench.constrainedRecord(10, 192L << 20, 7, 9, Seq(
+      "qa" -> Bench.constrainedQuery(0.5, 7, 9, None),
+      "qb" -> Bench.constrainedQuery(0.6, 0, 0, Some(Err)),
+      "qc" -> ListMap("skipped" -> true)))
+    main ++ ListMap(
+      "streaming" -> (stream ++ ListMap("wide" -> wide, "bulk" -> bulk, "state" -> state)),
+      "scaled" -> (scaled ++ ListMap("full" -> full)),
+      "constrained" -> constrained)
+  }
+
+  test("the full record keeps every block's key paths") {
+    val scaledPaths = Seq("", "/copies", "/runs", "/value", "/queries", "/queries/Q",
+      "/raw", "/raw/Q", "/raw/Q[]", "/load", "/load/Q", "/load/Q[]", "/failed",
+      "/failed[]", "/failed[]/name", "/failed[]/err", "/partial", "/partial/Q",
+      "/partial/Q[]", "/retried", "/retried[]")
+    val streamPaths = Seq("/pages", "/rows_per_page", "/rows", "/batches", "/sec",
+      "/rows_per_sec", "/steady_rows", "/steady_ms", "/steady_rows_per_sec", "/load",
+      "/batch_ms", "/batch_ms[]")
+    val expected = Set("/", "/metric", "/value", "/value_min", "/unit", "/queries",
+      "/queries/Q", "/runs", "/raw", "/raw/Q", "/raw/Q[]", "/load", "/load/Q",
+      "/load/Q[]", "/sf", "/cpus", "/budget_sec", "/elapsed_sec", "/skipped",
+      "/skipped[]", "/streaming", "/streaming/wide", "/streaming/bulk",
+      "/streaming/state", "/scaled/runs_requested", "/scaled/full",
+      "/constrained", "/constrained/copies", "/constrained/memory_bytes",
+      "/constrained/reserved_bytes", "/constrained/shuffle_partitions",
+      "/constrained/spill_mem_bytes", "/constrained/spill_disk_bytes",
+      "/constrained/queries", "/constrained/queries/Q",
+      "/constrained/queries/Q/sec", "/constrained/queries/Q/spill_mem_bytes",
+      "/constrained/queries/Q/spill_disk_bytes", "/constrained/queries/Q/err",
+      "/constrained/queries/Q/skipped") ++
+      Seq("/streaming", "/streaming/wide", "/streaming/bulk").flatMap(b =>
+        streamPaths.map(b + _)) ++
+      Seq("/keys", "/batches", "/rows", "/sec", "/rows_per_sec", "/provider",
+        "/state_rows", "/state_rows[]", "/state_mem_bytes", "/state_mem_bytes[]",
+        "/state_rows_updated", "/state_rows_updated[]", "/state_rows_removed",
+        "/state_rows_removed[]", "/bounded", "/batch_ms", "/batch_ms[]")
+        .map("/streaming/state" + _) ++
+      Seq("/scaled", "/scaled/full").flatMap(b => scaledPaths.map(b + _))
+    val tree = Harness.mapper.readTree(Harness.json(sampleRecord()))
+    assert(keyPaths(tree, Names) === expected)
+    // the blocks also keep today's values where the samples fix them
+    assert(tree.at("/queries/qa").asDouble === 2.0)
+    assert(tree.at("/raw/qa").toString === "[1.0,2.0,3.0]")
+    assert(tree.at("/load/qa").toString === "[1.23,2.5,0.1]")
+    assert(tree.at("/streaming/steady_rows_per_sec").asDouble === 16000 * 1000.0 / 145)
+    assert(tree.at("/streaming/state/bounded").asBoolean)
+    assert(tree.at("/scaled/value").asDouble === 0.4 + 0.3)
+    assert(tree.at("/scaled/partial/qb").toString === Harness.json(Seq(1, 2, Err)))
+    assert(tree.at("/scaled/failed/0/name").asText === "qc")
+    assert(!tree.at("/scaled/full/runs_requested").isNumber)
+  }
+
+  test("error text with quotes, backslashes and control characters round-trips") {
+    val tree = Harness.mapper.readTree(Harness.json(sampleRecord()))
+    assert(tree.at("/skipped/1").asText === Err)
+    assert(tree.at("/scaled/failed/0/err").asText === Err)
+    assert(tree.at("/scaled/partial/qb/2").asText === Err)
+    assert(tree.at("/constrained/queries/qb/err").asText === Err)
+  }
+
+  test("the compact line for the full catalog stays under 1.5 KB and parses") {
+    val full = Harness.mapper.valueToTree[JsonNode](sampleRecord(238))
+    val line = Harness.json(Bench.compact(full,
+      Bench.artifactDest(None, narrow = false, skippedN = 2, sf = "0.01", cpus = "4")))
+    assert(line.length <= 1536, s"${line.length} bytes")
+    val c = Harness.mapper.readTree(line)
+    assert(c.properties.asScala.toSeq.map(_.getKey) === Seq("metric", "value",
+      "value_min", "unit", "sf", "cpus", "compact", "n_queries", "runs", "budget_sec",
+      "elapsed_sec", "skipped_n", "artifact", "queries", "summary"))
+    assert(c.get("n_queries").asInt === 238 && c.get("skipped_n").asInt === 2)
+    assert(c.get("queries").size === 5)
+    assert(c.get("queries").properties.asScala.toSeq.head.getKey === "catalog_query_with_a_long_name_238")
+    assert(c.get("summary").properties.asScala.toSeq.map(_.getKey) === Seq("main.value",
+      "main.value_min", "stream.steady_rps", "wide.steady_rps", "bulk.steady_rps",
+      "constrained.spill_mem_bytes", "constrained.spill_disk_bytes", "constrained.errors",
+      "scaled.n", "scaled.value", "scaled-full.n", "scaled-full.value"))
+    assert(c.at("/summary/constrained.errors").asInt === 1)
+    assert(c.at("/summary/scaled.n").asInt === 2)
+    assert(c.get("value").asDouble === full.get("value").asDouble)
+  }
+
+  test("oracle SQL with tabs and carriage returns parses back equal") {
+    val dir = tmpDir()
+    val sql = Map("q_tab" -> "SELECT\ta,\r\n  b\rFROM t WHERE s = 'x\"y\\z'",
+      "q_ctl" -> "SELECT '\u0001\u001f' AS c")
+    Verify.writeOracleJson(dir.toString, sql)
+    val tree = Harness.mapper.readTree(Files.readString(dir.resolve("oracle_sql.json")))
+    assert(tree.properties.asScala.map(e => e.getKey -> e.getValue.asText).toMap === sql)
   }
 }

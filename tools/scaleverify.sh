@@ -7,7 +7,8 @@
 #
 # Usage: tools/scaleverify.sh [srcSfDir] [copies] [artifact.json]
 # Env:   SPARK_GRAFT_ONLY / SPARK_GRAFT_SCALE_ALL=1 widen or narrow the
-#        query set (default: Bench.headline); SPARK_GRAFT_CPUS.
+#        query set (default: Bench.headline); SPARK_GRAFT_CPUS (default:
+#        the machine's processor count).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -20,8 +21,7 @@ trap 'rm -rf "$WORK"' EXIT
 REPLICA="$WORK/replica"
 OUT="$WORK/out"
 
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" \
-  tools/run.sh graft.ScaleVerify "$SRC" "$REPLICA" "$COPIES" "$OUT" 2>"$WORK/stderr.log" || {
+tools/run.sh graft.ScaleVerify "$SRC" "$REPLICA" "$COPIES" "$OUT" 2>"$WORK/stderr.log" || {
     echo "[scaleverify] ScaleVerify JVM failed; stderr tail:" >&2
     tail -20 "$WORK/stderr.log" >&2
     exit 1
